@@ -64,9 +64,13 @@ _CC_DRIVER_EDGE_CAP = 250000
 
 
 def _cc_driver_edge_cap() -> int:
-    return int(
-        os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", str(_CC_DRIVER_EDGE_CAP))
-    )
+    raw = os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", str(_CC_DRIVER_EDGE_CAP))
+    try:
+        return int(raw)
+    except ValueError:
+        raise ValueError(
+            f"SPARK_GRAFT_CC_DRIVER_EDGES must be an integer edge count, got {raw!r}"
+        ) from None
 
 
 def _driver_components(sym_rows, id_type) -> tuple[list, StructType]:
@@ -130,6 +134,7 @@ def connected_components(
     unique — and the equivalence is pinned by the small-path/loop
     parity pytest.
     """
+    driver_cap = _cc_driver_edge_cap()  # a bad knob fails before any job
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -137,7 +142,7 @@ def connected_components(
         .distinct()
         .localCheckpoint()
     )
-    if sym.count() <= _cc_driver_edge_cap():
+    if sym.count() <= driver_cap:
         rows, schema = _driver_components(
             [(r["a"], r["b"]) for r in sym.collect()],
             sym.schema["a"].dataType,

@@ -307,7 +307,7 @@ def pagerank(
         # checkpoint flag the lazy plan still does, so they stay
         # cached (bounded: host-level tables).
         ranks = ranks.localCheckpoint(eager=True)
-        for helper in (e_cached, shares, nodes, linkers):
+        for helper in (e_cached, shares, nodes):
             helper.unpersist()
     return ranks
 

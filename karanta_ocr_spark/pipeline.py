@@ -20,6 +20,15 @@ Arrow-vectorized (one ``mapInPandas`` batch = many documents;
 UDFs). Assembly replicates ``build_dolma_document``
 (``karanta/pipeline.py:538-591``) byte-exactly in Catalyst
 expressions, so the whole agg stage stays in whole-stage codegen.
+
+A run with an output and a metrics table reads the resume snapshot
+once and extracts once: the extracted frame is a ``localCheckpoint``,
+and the three commits (output, lineage, failures) all consume it.
+A ``persist()`` cannot do this, because each file-source write calls
+``recacheByPath`` on its destination and the extracted plan reads all
+three destinations, so every write after the first would re-run the
+anti-joins against the new snapshot and extract again (see
+:func:`run_extraction`).
 """
 
 from __future__ import annotations
@@ -300,6 +309,13 @@ def with_rotation_attributes(docs: DataFrame) -> DataFrame:
     )
 
 
+def _release_checkpoint(df: DataFrame) -> None:
+    """Free the blocks of a ``localCheckpoint``-ed frame now.
+    ``DataFrame.unpersist`` is a no-op on one: the blocks belong to the
+    RDD under the checkpoint's logical plan, not to a cached plan."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(True)
+
+
 def run_extraction(
     spark: SparkSession,
     web_pages: DataFrame,
@@ -333,6 +349,20 @@ def run_extraction(
     *resume* — anti-joins the already-committed urls first: the
     reference's skip-if-done (bulk_processing/workers/
     inference_worker.py:316-321) as one distributed join.
+
+    With both *output_path* and *metrics_path*, the run reads the
+    resume snapshot once and extracts once. The extracted frame is a
+    lazy ``localCheckpoint``: the output append computes it and stores
+    its blocks, and the lineage and failure writes read those blocks,
+    so the lineage counts exactly the docs this run processed. The
+    blocks are released when the writes finish. A ``persist()`` would
+    not survive the first write: Spark's file-source write calls
+    ``recacheByPath`` on its destination, which drops every cached
+    plan reading that path, and this plan reads the output (resume)
+    and both metrics tables (quarantine). The trade-off: the blocks
+    live only on executors, so if one is lost after the output commit
+    the lineage write fails instead of recomputing. The output is
+    committed by then, so a re-run resumes cleanly past it.
     """
     cfg = cfg or ExtractConfig()
     if apply_conf:
@@ -360,25 +390,26 @@ def run_extraction(
     if repartition_input:
         df = prepare_for_extraction(df, num_partitions)
 
+    extracted = (
+        extract_documents_fused(df, cfg) if mode == "fused" else extract_pages(df, cfg)
+    )
+    if metrics_path and output_path:
+        # One extraction for three commits; a persist() would be
+        # dropped by the first write's recacheByPath (see docstring).
+        extracted = extracted.localCheckpoint(eager=False)
+    elif metrics_path:
+        extracted = extracted.persist()
     if mode == "fused":
-        raw = extract_documents_fused(df, cfg)
-        if metrics_path:
-            raw = raw.persist()
-        docs = raw.filter(F.col("ok")).select(*OUTPUT_COLS)
-        lineage_src = raw
+        docs = extracted.filter(F.col("ok")).select(*OUTPUT_COLS)
     else:
-        pages = extract_pages(df, cfg)
-        if metrics_path:
-            pages = pages.persist()
-        docs = assemble_documents(pages, cfg)
-        lineage_src = pages
+        docs = assemble_documents(extracted, cfg)
     docs = with_rotation_attributes(docs)
 
     def _emit_metrics() -> None:
         from karanta_ocr_spark.metrics import write_lineage
 
         write_lineage(
-            spark, lineage_src, metrics_path,
+            spark, extracted, metrics_path,
             run_id=uuid.uuid4().hex[:12], config_hash=cfg.config_hash(),
         )
 
@@ -388,21 +419,24 @@ def run_extraction(
         # all-or-nothing, which is what the resume anti-join requires.
         from karanta_ocr_spark.sources.table_io import read_table, write_table
 
-        write_table(docs, output_path, mode="append")
-        if metrics_path:
-            _emit_metrics()
-            lineage_src.unpersist()
+        try:
+            write_table(docs, output_path, mode="append")
+            if metrics_path:
+                _emit_metrics()
+        finally:
+            if metrics_path:
+                _release_checkpoint(extracted)
         return read_table(spark, output_path)
 
     if metrics_path:
         # No-output metrics variant (REPL/inspection): emit lineage —
         # the two writes are the caller's explicit ask — but do NOT
         # materialize docs too (an eager persist+count here cost one
-        # whole extra job, r3 VERDICT nit #1). lineage_src stays
+        # whole extra job). `extracted` stays
         # persisted instead: docs is a filter+select over it, so the
         # caller's own first action reuses the cache rather than
         # re-running extraction; the cache is bounded by the input and
-        # is dropped by Spark's LRU or an explicit unpersist. The
-        # write path above keeps its emit-then-unpersist shape.
+        # is dropped by Spark's LRU or an explicit unpersist. Nothing
+        # here writes a path the plan reads, so the cache survives.
         _emit_metrics()
     return docs

@@ -1,5 +1,6 @@
 """Connected components + duplicate clusters."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from karanta_ocr_spark.operators.graph import (
@@ -174,6 +175,13 @@ def test_connected_components_driver_path_matches_loop(spark, monkeypatch):
         comps.setdefault(c, set()).add(node)
     assert set(comps) == {1, 100, 200, 300}
     assert comps[1] == set(range(1, 31))
+
+
+def test_connected_components_rejects_malformed_driver_cap(spark, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_EDGES", "250k")
+    df = spark.createDataFrame([(1, 2)], "src long, dst long")
+    with pytest.raises(ValueError, match=r"SPARK_GRAFT_CC_DRIVER_EDGES.*'250k'"):
+        connected_components(df)
 
 
 def test_duplicate_clusters_anchor_contraction_paths(spark):

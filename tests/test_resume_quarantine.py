@@ -1,6 +1,10 @@
 """Failure quarantine: permanently-failing docs stop being retried
 after max_attempts runs (lineage-driven, no mutable state)."""
 
+import pytest
+from pyspark.sql import functions as F
+
+from karanta_ocr_spark.metrics import failures_path
 from karanta_ocr_spark.pipeline import run_extraction
 from karanta_ocr_spark.resume import filter_known_failures
 from karanta_ocr_spark.sources.web_pages import synthetic_web_pages
@@ -99,3 +103,58 @@ def test_pre_upgrade_lineage_attempts_still_count(spark, tmp_path):
     kept = {r["url"] for r in
             filter_known_failures(spark, src, met, max_attempts=3).collect()}
     assert kept == {"https://ok.example.org/y"}
+
+
+def _resumed_corpus(spark):
+    """Four corrupt PDFs (always fail) and eight good pages. The first
+    run sees half of each; the resumed run then sees all of them."""
+    import datetime
+
+    from karanta_ocr_spark.sources.web_pages import WEB_PAGES_SCHEMA
+
+    ts = datetime.datetime(2025, 1, 1)
+    bad = [f"https://bad.example.org/{i}" for i in range(4)]
+    good = [f"https://good.example.org/{i}" for i in range(8)]
+    rows = [(u, ts, b"%PDF-1.4\nnot a real pdf body at all", None, "en")
+            for u in bad] + [
+        (u, ts, ("<html><body><article><h1>T</h1><p>" + f"words {u} " * 40 +
+                 "</p></article></body></html>").encode(), None, "en")
+        for u in good
+    ]
+    web = spark.createDataFrame(rows, WEB_PAGES_SCHEMA).repartition(2)
+    first = web.where(web.url.isin(bad[:2] + good[:4]))
+    return web, first, set(bad), set(good[:4])
+
+
+@pytest.mark.parametrize("mode", ["fused", "staged"])
+def test_resumed_run_lineage_counts_processed_urls(spark, tmp_path, mode):
+    # A resumed run's lineage must describe the docs it processed: the
+    # output append must not make the lineage and failure writes
+    # re-read the resume snapshot (which then holds the new commits).
+    web, first, bad, committed = _resumed_corpus(spark)
+    out, met = str(tmp_path / "extr"), str(tmp_path / "metrics")
+    run_extraction(spark, first, output_path=out, metrics_path=met,
+                   num_partitions=2, mode=mode)
+    prior = {r["run_id"] for r in spark.read.parquet(met).select("run_id").collect()}
+
+    run_extraction(spark, web, output_path=out, metrics_path=met,
+                   num_partitions=2, mode=mode)
+    processed = {r["url"] for r in web.select("url").collect()} - committed
+    lineage = spark.read.parquet(met).filter(~F.col("run_id").isin(sorted(prior)))
+    assert lineage.groupBy().sum("rows_in").first()[0] == len(processed)
+    failed = {r["url"] for r in spark.read.parquet(failures_path(met))
+              .filter(~F.col("run_id").isin(sorted(prior))).collect()}
+    assert failed == bad & processed
+    assert spark.read.parquet(out).count() == 8
+
+
+@pytest.mark.parametrize("mode", ["fused", "staged"])
+def test_resumed_run_releases_its_blocks(spark, tmp_path, mode):
+    web, first, _, _ = _resumed_corpus(spark)
+    out, met = str(tmp_path / "extr"), str(tmp_path / "metrics")
+    run_extraction(spark, first, output_path=out, metrics_path=met,
+                   num_partitions=2, mode=mode)
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    run_extraction(spark, web, output_path=out, metrics_path=met,
+                   num_partitions=2, mode=mode)
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
